@@ -28,9 +28,15 @@ from .extract import (
     value_only,
 )
 from .selector import Atom, Compound, compile_selector
+from .session import stat_gate_zip_invalidation
 from .tokenizer import DocIndex, parse_attrs, trim_html
 
 __version__ = "0.1.0"
+
+# every Python worker imports this package to unpickle a pipeline closure;
+# from then on its per-task importlib.invalidate_caches() skips unchanged
+# zip archives (see session.stat_gate_zip_invalidation)
+stat_gate_zip_invalidation()
 
 __all__ = [
     "PH",

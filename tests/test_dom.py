@@ -223,3 +223,37 @@ def test_ref_compat_mode_quoted_values():
     compat = compile_selector('[title="a b"]', ref_compat=True)
     assert compat[0][0].attributes[0].value == 'ab"'  # spaces dropped + quote
     assert len(PH(doc, ref_compat=True).find('[title="a b"]')) == 0
+
+
+def test_shared_selector_plans_stay_unmutated():
+    """dom._cached_plan hands one plan object to every caller in the
+    process. After the extract_page selectors (title, table, the form
+    controls) run through PH.find and the extractors over seed-42 fixture
+    docs, every cached plan must still equal a freshly compiled one, so an
+    in-place edit of a shared plan fails here."""
+    from parse_html_spark.dom import _cached_plan
+    from parse_html_spark.extract import (
+        FORM_SELECTOR,
+        extract_form,
+        extract_table_list,
+        to_plain,
+    )
+    from parse_html_spark.fixtures import gen_docs
+    from parse_html_spark.pipeline import assemble
+    from parse_html_spark.selector import compile_selector
+
+    selectors = ("title", "table", FORM_SELECTOR)
+    n_tables = n_forms = 0
+    for d in gen_docs(40, seed=42):
+        html, _media = assemble(d["spans"])
+        for compat in (False, True):
+            ph = PH(html, ref_compat=compat)
+            ph.find("title").text()
+            n_tables += len(to_plain(extract_table_list(ph.find("table"), val_only=True)))
+            n_forms += len(to_plain(extract_form(ph)))
+    assert n_tables and n_forms  # the fixtures exercise every selector
+    for sel in selectors:
+        for compat in (False, True):
+            plan = _cached_plan(sel, compat)
+            assert plan is _cached_plan(sel, compat)
+            assert plan == compile_selector(sel, ref_compat=compat), (sel, compat)

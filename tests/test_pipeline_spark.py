@@ -368,3 +368,48 @@ def test_resumable_metrics_match_written_rows(spark, tmp_path):
     total_metric = m.agg({"n_spans": "sum"}).first()[0]
     total_actual = spark.read.parquet(os.path.join(out, "bucket=*")).count()
     assert total_metric == total_actual
+
+
+def test_worker_tasks_do_not_reread_zip_directories(spark):
+    """Once a Python worker has imported the package, the per-task
+    importlib.invalidate_caches() in PySpark's setup_spark_files no longer
+    re-reads the directory of pyspark.zip (or any unchanged archive).
+    Each task reports the zipimport._read_directory calls its worker made
+    since the previous task's probe; a worker is primed by its first
+    probe (package import plus one invalidation pass)."""
+    import sys
+
+    def probe(batches):
+        import importlib
+        import os
+        import zipimport
+
+        import pandas as pd
+
+        import parse_html_spark  # noqa: F401  (installs the gate)
+
+        primed = hasattr(zipimport._read_directory, "calls")
+        if not primed:
+            importlib.invalidate_caches()
+            read = zipimport._read_directory
+
+            def counting(path):
+                counting.calls += 1
+                return read(path)
+
+            counting.calls = 0
+            zipimport._read_directory = counting
+        counting = zipimport._read_directory
+        rereads, counting.calls = counting.calls, 0
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "primed": [primed], "rereads": [rereads]})
+
+    parts = 2 * spark.sparkContext.defaultParallelism
+    df = spark.range(0, parts, 1, parts)
+    out = df.mapInPandas(probe, "pid long, primed boolean, rereads long").toPandas()
+    assert len(out) == parts
+    primed = out[out["primed"]]
+    assert len(primed) > 0, out  # workers are reused across tasks
+    if sys.version_info < (3, 12):
+        assert (primed["rereads"] == 0).all(), out
