@@ -8,43 +8,80 @@ The per-doc HTML byte stream is the offset-ordered concatenation of
 kind='text' span texts; media spans occupy their offset slots and surface
 as kind='media' output spans.
 
-All pipelines are stateless mapInPandas stages (Arrow-vectorized, no
-per-row Python at the JVM boundary) followed by native DataFrame ops, so
-Catalyst handles pushdown/pruning and the same code runs under
-readStream ... foreachBatch unchanged.
+Every per-document pipeline is ONE stateless mapInPandas stage built by
+``map_docs(df, per_doc, schema)`` (Arrow-vectorized, no per-row Python at
+the JVM boundary), followed by native DataFrame ops, so Catalyst handles
+pushdown/pruning and the same code runs under readStream ... foreachBatch
+unchanged. map_docs owns the column pruning, the package shipping, the
+batch loop, span assembly and the one DocIndex per document; a pipeline
+only supplies
+
+    per_doc(doc_id, doc: DocIndex, media: [(char_pos, media_ref)])
+        -> one chunk per output column, in schema order
+
+where every chunk is a list or a 1-D ndarray (one kind per column) and
+all chunks of one call have the same length (0 rows, 1 row per doc, or
+1 row per match/node).
+The packer joins each column once per batch (np.concatenate for array
+chunks, list.extend for list chunks) -- never per-row tuples or dicts,
+which measured ~9x slower on node_table.
 """
 
 from __future__ import annotations
 
+import json
 import time
 from operator import itemgetter
-from typing import Iterator
 
 from .boilerplate import main_content_spans
 from .dom import PH
-from .extract import extract_form, extract_node, to_plain, value_only
+from .extract import extract_form, extract_table_list, prepare_post_form, to_plain
 from .matcher import find_nodes
 from .selector import compile_selector
 from .tokenizer import DocIndex
 
-SPAN_SCHEMA = (
-    "doc_id string, `order` int, kind string, text string, media_ref string"
-)
 MATCH_SCHEMA = "doc_id string, match_order int, value string"
 
 
-def _map_in_pandas(df, run, schema, inputs=("doc_id", "spans")):
-    """mapInPandas with COLUMN PRUNING at the Python boundary: only the
-    columns the stage reads cross the Arrow bridge. mapInPandas itself
-    cannot tell Catalyst which columns it uses, so without this a wide
-    input table (ingest metadata, lineage columns, ...) would be
-    serialized into every Python worker for nothing."""
+def map_docs(df, per_doc, schema):
+    """The one per-document map (contract in the module docstring).
+
+    COLUMN PRUNING at the Python boundary: only (doc_id, spans) cross the
+    Arrow bridge. mapInPandas itself cannot tell Catalyst which columns
+    it uses, so without the select a wide input table (ingest metadata,
+    lineage columns, ...) would be serialized into every Python worker
+    for nothing."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import DataType
+
     from .session import ensure_py_files
 
+    schema = DataType.fromDDL(schema)  # parsed once, for names and the map
+    names = schema.names
+
+    def pack(chunks):
+        if chunks and isinstance(chunks[0], np.ndarray):
+            return np.concatenate(chunks)
+        col = []
+        for c in chunks:
+            col.extend(c)
+        # an empty list would become a float64 column, which Arrow cannot
+        # convert to an array<...> field (a batch with no node/match rows)
+        return col if col else np.empty(0, dtype=object)
+
+    def run(batches):
+        for pdf in batches:
+            cols = [[] for _ in names]
+            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
+                html, media = assemble(_spans_of_row(row_spans))
+                for col, chunk in zip(cols, per_doc(doc_id, DocIndex(html), media)):
+                    col.append(chunk)
+            yield pd.DataFrame({n: pack(c) for n, c in zip(names, cols)})
+
     ensure_py_files(df.sparkSession)
-    need = [c for c in inputs if c in df.columns]
-    if len(need) == len(inputs) and len(df.columns) > len(need):
-        df = df.select(*need)
+    if len(df.columns) > 2 and {"doc_id", "spans"} <= set(df.columns):
+        df = df.select("doc_id", "spans")
     return df.mapInPandas(run, schema=schema)
 
 
@@ -83,49 +120,17 @@ def extract_spans(df, with_partition_id: bool = False):
     per-span Python rows never exist, so the row form costs the same
     map stage as extract_spans_compact plus a codegen'd generate.
 
-    with_partition_id=True appends the physical partition id (via
-    TaskContext) so per-partition extraction metrics/lineage can be
-    aggregated relationally downstream (SURVEY.md 2.9); that path keeps
-    the direct row emitter so the id rides every span row."""
-    import pandas as pd
-
+    with_partition_id=True appends the physical partition id so
+    per-partition extraction metrics/lineage can be aggregated
+    relationally downstream (SURVEY.md 2.9). The explode runs in the map's
+    own stage (no exchange in between), so spark_partition_id() is the
+    partition the document was extracted in."""
+    out = explode_compact(extract_spans_compact(df))
     if not with_partition_id:
-        return explode_compact(extract_spans_compact(df))
+        return out
+    from pyspark.sql import functions as F
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        pid = -1
-        if with_partition_id:
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else -1
-        for pdf in batches:
-            out_doc, out_ord, out_kind, out_text, out_ref = [], [], [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                spans = main_content_spans(doc, media)
-                for i, (kind, text, ref) in enumerate(spans):
-                    out_doc.append(doc_id)
-                    out_ord.append(i)
-                    out_kind.append(kind)
-                    out_text.append(text)
-                    out_ref.append(ref)
-            cols = {
-                "doc_id": out_doc,
-                "order": pd.array(out_ord, dtype="int32"),
-                "kind": out_kind,
-                "text": out_text,
-                "media_ref": out_ref,
-            }
-            if with_partition_id:
-                cols["partition_id"] = pd.array(
-                    [pid] * len(out_doc), dtype="int32"
-                )
-            yield pd.DataFrame(cols)
-
-    schema = SPAN_SCHEMA + (", partition_id int" if with_partition_id else "")
-    return _map_in_pandas(df, run, schema)
+    return out.withColumn("partition_id", F.spark_partition_id().cast("int"))
 
 
 def partition_metrics(df_spans_with_pid):
@@ -140,42 +145,19 @@ def partition_metrics(df_spans_with_pid):
     )
 
 
-NESTED_SPAN_SCHEMA = (
-    "doc_id string, spans array<struct<`order`:int,kind:string,"
-    "text:string,media_ref:string>>"
-)
-
-
-def extract_spans_nested(df):
-    """Production sink shape: ONE row per document carrying the ordered
-    span sequence as array<struct>. Same semantics as extract_spans, but
-    ~50x fewer output rows -- Arrow/JVM serialization drops from the
-    dominant cost to noise, and downstream per-doc ops need no groupBy."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, span_lists = [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                spans = main_content_spans(doc, media)
-                ids.append(doc_id)
-                span_lists.append(
-                    [
-                        {"order": i, "kind": k, "text": t, "media_ref": r}
-                        for i, (k, t, r) in enumerate(spans)
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": ids, "spans": span_lists})
-
-    return _map_in_pandas(df, run, NESTED_SPAN_SCHEMA)
-
-
 COMPACT_SPAN_SCHEMA = (
     "doc_id string, is_media array<boolean>, texts array<string>, "
     "media_refs array<string>"
 )
+
+
+def _compact(spans):
+    """One doc's spans as the three compact-shape chunks."""
+    return (
+        [[k == "media" for k, _t, _r in spans]],
+        [[t for _k, t, _r in spans]],
+        [[r for _k, _t, r in spans]],
+    )
 
 
 def extract_spans_compact(df):
@@ -185,28 +167,11 @@ def extract_spans_compact(df):
     the north rule, but Arrow serializes plain string/bool lists instead
     of per-span structs: ~2.5-3x the throughput of the struct shapes.
     explode_compact() recovers the row form losslessly."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, kinds, texts, refs = [], [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                spans = main_content_spans(DocIndex(html), media)
-                ids.append(doc_id)
-                kinds.append([k == "media" for k, _t, _r in spans])
-                texts.append([t for _k, t, _r in spans])
-                refs.append([r for _k, _t, r in spans])
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_media": kinds,
-                    "texts": texts,
-                    "media_refs": refs,
-                }
-            )
+    def per_doc(doc_id, doc, media):
+        return ([doc_id], *_compact(main_content_spans(doc, media)))
 
-    return _map_in_pandas(df, run, COMPACT_SPAN_SCHEMA)
+    return map_docs(df, per_doc, COMPACT_SPAN_SCHEMA)
 
 
 def explode_compact(df):
@@ -231,24 +196,33 @@ def extract_docs(df):
     pass -- no span-row explosion, no groupBy shuffle. text = the span
     texts joined with ' ' (media spans contribute their empty text),
     byte-identical to reassemble_docs(extract_spans(df))."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, texts, refs = [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                spans = main_content_spans(doc, media)
-                ids.append(doc_id)
-                texts.append(" ".join(t for _k, t, _r in spans))
-                refs.append([r for k, _t, r in spans if r is not None])
-            yield pd.DataFrame(
-                {"doc_id": ids, "text": texts, "media_refs": refs}
-            )
+    def per_doc(doc_id, doc, media):
+        spans = main_content_spans(doc, media)
+        return (
+            [doc_id],
+            [" ".join(t for _k, t, _r in spans)],
+            [[r for k, _t, r in spans if r is not None]],
+        )
 
-    return _map_in_pandas(
-        df, run, "doc_id string, text string, media_refs array<string>"
+    return map_docs(
+        df, per_doc, "doc_id string, text string, media_refs array<string>"
+    )
+
+
+def _node_value(mode: str, attr_name: str | None = None):
+    """The selector maps' per-match value, validated on the driver:
+    'text' (strip_tags of the node), 'html' (outer HTML) or 'attr'
+    (the attr_name attribute, NULL when absent)."""
+    if mode == "text":
+        return lambda doc, n: doc.text_between(doc.start_l[n], doc.end_l[n])
+    if mode == "html":
+        return lambda doc, n: doc.outer(n)
+    if mode == "attr" and attr_name:
+        return lambda doc, n: doc.attrs(n, validate=True).get(attr_name)
+    raise ValueError(
+        f"mode={mode!r}, attr_name={attr_name!r}: mode must be 'text', "
+        "'html', or 'attr' with an attr_name"
     )
 
 
@@ -261,42 +235,27 @@ def select_spans(
 ):
     """Run a CSS selector over every document; one output row per match.
 
-    mode: 'text' | 'html' | 'attr' (attr_name required for 'attr').
+    mode: 'text' | 'html' | 'attr' (attr_name required for 'attr'); any
+    other combination raises ValueError on the driver.
     The selector is compiled ONCE on the driver and closure-captured
     (ref_compat=True compiles in reference-bug-compatible mode,
     SURVEY 2.11 A.8/A.12)."""
-    import pandas as pd
-
+    value = _node_value(mode, attr_name)
     plan = compile_selector(selector, ref_compat=ref_compat)
+    if plan is None:  # matches nothing: no doc needs assembling or tokenizing
+        from pyspark.sql import functions as F
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out_doc, out_ord, out_val = [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                if plan is None:
-                    continue
-                html, _ = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                ids = find_nodes(doc, plan, [(0, len(html))])
-                for k, n in enumerate(ids):
-                    if mode == "text":
-                        val = doc.text_between(doc.start_l[n], doc.end_l[n])
-                    elif mode == "html":
-                        val = doc.outer(n)
-                    else:
-                        val = doc.attrs(n, validate=True).get(attr_name)
-                    out_doc.append(doc_id)
-                    out_ord.append(k)
-                    out_val.append(val)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "match_order": pd.array(out_ord, dtype="int32"),
-                    "value": pd.array(out_val, dtype=object),
-                }
-            )
+        df = df.where(F.lit(False))
 
-    return _map_in_pandas(df, run, MATCH_SCHEMA)
+    def per_doc(doc_id, doc, _media):
+        ids = find_nodes(doc, plan, [(0, len(doc.html))])
+        return (
+            [doc_id] * len(ids),
+            list(range(len(ids))),
+            [value(doc, n) for n in ids],
+        )
+
+    return map_docs(df, per_doc, MATCH_SCHEMA)
 
 
 def select_spans_multi(
@@ -307,96 +266,63 @@ def select_spans_multi(
     amortizing the tokenizer across queries is the right shape when a
     production job extracts dozens of fields per page.
 
+    mode: 'text' | 'html' (no attr_name, so 'attr' raises ValueError).
+    Invalid selectors match nothing.
     Output: (doc_id, query, match_order, value)."""
-    import pandas as pd
-
+    value = _node_value(mode)
     plans = {
         name: compile_selector(sel, ref_compat=ref_compat)
         for name, sel in selectors.items()
     }
+    plans = {name: plan for name, plan in plans.items() if plan is not None}
+    if not plans:  # as in select_spans: no doc reaches Python
+        from pyspark.sql import functions as F
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out_doc, out_q, out_ord, out_val = [], [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                scopes = [(0, len(html))]
-                for name, plan in plans.items():
-                    if plan is None:
-                        continue
-                    for k, n in enumerate(find_nodes(doc, plan, scopes)):
-                        if mode == "text":
-                            val = doc.text_between(
-                                doc.start_l[n], doc.end_l[n]
-                            )
-                        else:
-                            val = doc.outer(n)
-                        out_doc.append(doc_id)
-                        out_q.append(name)
-                        out_ord.append(k)
-                        out_val.append(val)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "query": out_q,
-                    "match_order": pd.array(out_ord, dtype="int32"),
-                    "value": pd.array(out_val, dtype=object),
-                }
-            )
+        df = df.where(F.lit(False))
 
-    return _map_in_pandas(
-        df, run, "doc_id string, query string, match_order int, value string"
+    def per_doc(doc_id, doc, _media):
+        scopes = [(0, len(doc.html))]
+        out_q, out_ord, out_val = [], [], []
+        for name, plan in plans.items():
+            for k, n in enumerate(find_nodes(doc, plan, scopes)):
+                out_q.append(name)
+                out_ord.append(k)
+                out_val.append(value(doc, n))
+        return [doc_id] * len(out_q), out_q, out_ord, out_val
+
+    return map_docs(
+        df, per_doc, "doc_id string, query string, match_order int, value string"
     )
 
 
 def extract_tables_df(df, selector: str = "table"):
     """extractTable over every doc -> (doc_id, table_order, cells_json)."""
-    import json
 
-    import pandas as pd
+    def per_doc(doc_id, doc, _media):
+        ph = PH(doc.html, doc=doc).find(selector)
+        tables = extract_table_list(ph, val_only=True)
+        return (
+            [doc_id] * len(tables),
+            list(range(len(tables))),
+            [json.dumps(to_plain(t), ensure_ascii=False) for t in tables],
+        )
 
-    from .extract import extract_table_list
+    return map_docs(df, per_doc, "doc_id string, table_order int, cells_json string")
 
-    def run(batches):
-        for pdf in batches:
-            out_doc, out_ord, out_json = [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                ph = PH(html).find(selector)
-                tables = extract_table_list(ph, val_only=True)
-                for k, t in enumerate(tables):
-                    out_doc.append(doc_id)
-                    out_ord.append(k)
-                    out_json.append(json.dumps(to_plain(t), ensure_ascii=False))
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "table_order": pd.array(out_ord, dtype="int32"),
-                    "cells_json": out_json,
-                }
-            )
 
-    return _map_in_pandas(df, run, "doc_id string, table_order int, cells_json string")
+def _forms_df(df, form_fields):
+    """form_fields(PH) over every doc -> (doc_id, form_json)."""
+
+    def per_doc(doc_id, doc, _media):
+        fields = to_plain(form_fields(PH(doc.html, doc=doc)))
+        return [doc_id], [json.dumps(fields, ensure_ascii=False)]
+
+    return map_docs(df, per_doc, "doc_id string, form_json string")
 
 
 def extract_forms_df(df):
     """extractForm over every doc -> (doc_id, form_json)."""
-    import json
-
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            out_doc, out_json = [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                fields = to_plain(extract_form(PH(html)))
-                out_doc.append(doc_id)
-                out_json.append(json.dumps(fields, ensure_ascii=False))
-            yield pd.DataFrame({"doc_id": out_doc, "form_json": out_json})
-
-    return _map_in_pandas(df, run, "doc_id string, form_json string")
+    return _forms_df(df, extract_form)
 
 
 NODE_SCHEMA = (
@@ -418,74 +344,28 @@ def node_table(df, with_attrs: bool = False):
     crosses the Arrow bridge as parallel key/value arrays (primitive
     string columns, no per-node Python dicts) and becomes a MapType
     JVM-side via map_from_arrays."""
-    import pandas as pd
-
     import numpy as np
 
-    def run(batches):
-        for pdf in batches:
-            # parallel column lists (NOT per-node dicts): the numeric node
-            # arrays are appended whole per doc and concatenated once per
-            # batch -- Arrow serializes primitive columns, never row objects
-            col_doc, col_nid, col_tag = [], [], []
-            col_ak, col_av = [], []
-            num_chunks = []  # per-doc (6, n) int64 blocks
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                n = doc.n
-                if n == 0:
-                    continue
-                col_doc.extend([doc_id] * n)
-                col_nid.append(np.arange(n, dtype=np.int32))
-                col_tag.extend(doc.tag)
-                num_chunks.append(
-                    np.stack(
-                        (doc.start, doc.end, doc.cstart, doc.cend,
-                         doc.parent, doc.depth)
-                    )
-                )
-                if with_attrs:
-                    for i in range(n):
-                        items = doc.attrs(i)
-                        col_ak.append(list(items.keys()))
-                        col_av.append(
-                            ["" if v is None else v for v in items.values()]
-                        )
-            if not col_doc:
-                cols = {
-                    "doc_id": [], "node_id": [], "tag": [], "start": [],
-                    "end": [], "cstart": [], "cend": [], "parent": [],
-                    "depth": [],
-                }
-                if with_attrs:
-                    cols["attrs_keys"] = []
-                    cols["attrs_vals"] = []
-                yield pd.DataFrame(cols)
-                continue
-            nums = np.concatenate(num_chunks, axis=1)
-            cols = {
-                "doc_id": col_doc,
-                "node_id": np.concatenate(col_nid),
-                "tag": col_tag,
-                "start": nums[0],
-                "end": nums[1],
-                "cstart": nums[2],
-                "cend": nums[3],
-                "parent": nums[4].astype(np.int32),
-                "depth": nums[5].astype(np.int32),
-            }
-            if with_attrs:
-                cols["attrs_keys"] = col_ak
-                cols["attrs_vals"] = col_av
-            yield pd.DataFrame(cols)
+    def per_doc(doc_id, doc, _media):
+        # the numeric node arrays go out whole per doc (concatenated once
+        # per batch): Arrow serializes primitive columns, never row objects
+        n = doc.n
+        cols = [
+            [doc_id] * n, np.arange(n, dtype=np.int32), doc.tag,
+            doc.start, doc.end, doc.cstart, doc.cend, doc.parent, doc.depth,
+        ]
+        if with_attrs:
+            attrs = [doc.attrs(i) for i in range(n)]
+            cols.append([list(a.keys()) for a in attrs])
+            cols.append([["" if v is None else v for v in a.values()] for a in attrs])
+        return cols
 
     if not with_attrs:
-        return _map_in_pandas(df, run, NODE_SCHEMA)
+        return map_docs(df, per_doc, NODE_SCHEMA)
     from pyspark.sql import functions as F
 
-    wide = _map_in_pandas(
-        df, run,
+    wide = map_docs(
+        df, per_doc,
         NODE_SCHEMA + ", attrs_keys array<string>, attrs_vals array<string>",
     )
     return wide.select(
@@ -521,43 +401,26 @@ def descendants_join(nodes, ancestor_tag: str, desc_tag: str, broadcast_ancestor
 def apply_ph(df, fn, schema: str):
     """Generic per-document API hook: fn(PH) -> dict of column values
     (one output row per doc, doc_id added automatically). This is the
-    distributed form of the reference's chainable per-document API."""
-    import pandas as pd
+    distributed form of the reference's chainable per-document API.
+    Columns are taken from the dict by schema field name; a name the
+    dict lacks is NULL."""
+    from pyspark.sql.types import DataType
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                vals = fn(PH(html))
-                vals["doc_id"] = doc_id
-                rows.append(vals)
-            yield pd.DataFrame(rows)
+    names = DataType.fromDDL(schema).names
 
-    return _map_in_pandas(df, run, schema)
+    def per_doc(doc_id, doc, _media):
+        vals = fn(PH(doc.html, doc=doc))
+        vals["doc_id"] = doc_id
+        return [[vals.get(name)] for name in names]
+
+    return map_docs(df, per_doc, schema)
 
 
 def extract_post_forms_df(df, trigger: str):
     """preparePostForm over every doc -> (doc_id, form_json): all
     [type=submit] fields except the trigger are dropped (anti-join
     semantics, SURVEY.md 2.7)."""
-    import json
-
-    import pandas as pd
-
-    from .extract import prepare_post_form
-
-    def run(batches):
-        for pdf in batches:
-            out_doc, out_json = [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, _ = assemble(_spans_of_row(row_spans))
-                fields = to_plain(prepare_post_form(PH(html), trigger))
-                out_doc.append(doc_id)
-                out_json.append(json.dumps(fields, ensure_ascii=False))
-            yield pd.DataFrame({"doc_id": out_doc, "form_json": out_json})
-
-    return _map_in_pandas(df, run, "doc_id string, form_json string")
+    return _forms_df(df, lambda ph: prepare_post_form(ph, trigger))
 
 
 # -- scale infrastructure --------------------------------------------------
@@ -601,50 +464,23 @@ def extract_page(df):
     (compact shape), all tables (valueOnly JSON), form fields, title,
     node count. This is the production job shape: at 100 TB you never
     pay the tokenizer twice for the same page."""
-    import json
 
-    import pandas as pd
+    def per_doc(doc_id, doc, media):
+        spans = main_content_spans(doc, media)
+        ph = PH(doc.html, doc=doc)
+        title_sel = ph.find("title")
+        tables = extract_table_list(ph.find("table"), val_only=True)
+        form = to_plain(extract_form(ph))
+        return (
+            [doc_id],
+            *_compact(spans),
+            [json.dumps([to_plain(t) for t in tables], ensure_ascii=False)],
+            [json.dumps(form, ensure_ascii=False)],
+            [title_sel.text()],
+            [doc.n],
+        )
 
-    from .extract import extract_form, extract_table_list, to_plain
-
-    def run(batches):
-        for pdf in batches:
-            # parallel column lists, not per-doc dicts: pandas' records
-            # path re-dispatches per cell (round-8)
-            c_id, c_km, c_tx, c_rf = [], [], [], []
-            c_tab, c_frm, c_ti, c_nn = [], [], [], []
-            for doc_id, row_spans in zip(pdf["doc_id"], pdf["spans"]):
-                html, media = assemble(_spans_of_row(row_spans))
-                doc = DocIndex(html)
-                spans = main_content_spans(doc, media)
-                ph = PH(html, doc=doc)
-                title_sel = ph.find("title")
-                tables = extract_table_list(ph.find("table"), val_only=True)
-                form = to_plain(extract_form(ph))
-                c_id.append(doc_id)
-                c_km.append([k == "media" for k, _t, _r in spans])
-                c_tx.append([t for _k, t, _r in spans])
-                c_rf.append([r for _k, _t, r in spans])
-                c_tab.append(
-                    json.dumps([to_plain(t) for t in tables], ensure_ascii=False)
-                )
-                c_frm.append(json.dumps(form, ensure_ascii=False))
-                c_ti.append(title_sel.text())
-                c_nn.append(doc.n)
-            yield pd.DataFrame(
-                {
-                    "doc_id": c_id,
-                    "is_media": c_km,
-                    "texts": c_tx,
-                    "media_refs": c_rf,
-                    "tables_json": c_tab,
-                    "form_json": c_frm,
-                    "title": c_ti,
-                    "n_nodes": pd.array(c_nn, dtype="int32"),
-                }
-            )
-
-    return _map_in_pandas(df, run, PAGE_SCHEMA)
+    return map_docs(df, per_doc, PAGE_SCHEMA)
 
 
 def doc_size_col():

@@ -100,6 +100,20 @@ def test_select_spans_multi_matches_single(spark, corpus):
         assert a == b, name
 
 
+def test_selector_modes_validated_on_driver(spark, corpus):
+    """A bad mode (or 'attr' without attr_name) raises before any job
+    runs, instead of silently returning another mode's values or NULLs;
+    select_spans_multi has no attr_name, so 'attr' is rejected there."""
+    from parse_html_spark.pipeline import select_spans_multi
+
+    for mode, attr_name in (("txt", None), ("attr", None), ("attr", "")):
+        with pytest.raises(ValueError):
+            select_spans(corpus, "p", mode=mode, attr_name=attr_name)
+    for mode in ("attr", "HTML"):
+        with pytest.raises(ValueError):
+            select_spans_multi(corpus, {"q": "p"}, mode=mode)
+
+
 def test_tables_and_forms(spark, corpus):
     tdf = extract_tables_df(corpus).toPandas()
     assert len(tdf) > 0
@@ -163,27 +177,6 @@ def test_media_interleave_golden(spark):
     ]
 
 
-def test_nested_equals_exploded(spark, corpus):
-    from parse_html_spark.pipeline import extract_spans_nested
-
-    import pyspark.sql.functions as F
-
-    nested = extract_spans_nested(corpus)
-    exploded_back = nested.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.order").alias("order"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
-    flat = extract_spans(corpus)
-    a = {tuple(r) for r in exploded_back.collect()}
-    b = {tuple(r) for r in flat.collect()}
-    assert a == b
-
-
 def test_compact_equals_exploded(spark, corpus):
     from parse_html_spark.pipeline import (
         explode_compact,
@@ -219,10 +212,17 @@ def test_extract_docs_equals_reassembled(spark, corpus):
 def test_partition_metrics(spark, corpus):
     from parse_html_spark.pipeline import partition_metrics
 
+    import pyspark.sql.functions as F
+
     out = extract_spans(corpus, with_partition_id=True)
     m = partition_metrics(out).toPandas()
     assert m["n_docs"].sum() == N_DOCS
     assert (m["n_spans"] > 0).all()
+    # the id is the partition the doc was extracted in: one per doc
+    per_doc = out.groupBy("doc_id").agg(
+        F.countDistinct("partition_id").alias("n")
+    ).toPandas()
+    assert len(per_doc) == N_DOCS and (per_doc["n"] == 1).all()
 
 
 def test_prepare_partitions_runs(spark, corpus):
@@ -352,6 +352,13 @@ def test_node_table_attrs_opt_in(spark, corpus):
             k: ("" if v is None else v) for k, v in doc.attrs(int(i)).items()
         }
         assert dict(row_attrs) == want, (d["doc_id"], i)
+    # a batch with no element at all still packs its array columns
+    bare = spark.createDataFrame(
+        [("t0", [("text", "no tags here", None, 0)]), ("t1", None)],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    ).coalesce(1)
+    assert node_table(bare, with_attrs=True).count() == 0
 
 
 def test_resumable_metrics_match_written_rows(spark, tmp_path):

@@ -56,16 +56,48 @@ def test_lsh_joins_are_never_cartesian(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_arrow_bridge_prunes_columns(spark, corpus):
-    """mapInPandas stages select only (doc_id, spans): the ingest
+PER_DOC_MAPS = {
+    "extract_spans": lambda P, df: P.extract_spans(df),
+    "extract_spans_pid": lambda P, df: P.extract_spans(df, with_partition_id=True),
+    "extract_spans_compact": lambda P, df: P.extract_spans_compact(df),
+    "extract_docs": lambda P, df: P.extract_docs(df),
+    "extract_page": lambda P, df: P.extract_page(df),
+    "select_spans": lambda P, df: P.select_spans(df, "p", mode="html"),
+    "select_spans_multi": lambda P, df: P.select_spans_multi(df, {"a": "td"}),
+    "extract_tables_df": lambda P, df: P.extract_tables_df(df),
+    "extract_forms_df": lambda P, df: P.extract_forms_df(df),
+    "extract_post_forms_df": lambda P, df: P.extract_post_forms_df(df, "go"),
+    "node_table": lambda P, df: P.node_table(df),
+    "node_table_attrs": lambda P, df: P.node_table(df, with_attrs=True),
+    "apply_ph": lambda P, df: P.apply_ph(
+        df, lambda ph: {"t": ph.find("title").text()}, "t string, doc_id string"
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PER_DOC_MAPS))
+def test_arrow_bridge_prunes_columns(spark, corpus, name):
+    """Every per-doc map selects only (doc_id, spans): the ingest
     n_chars column must not cross the Python boundary, and the pruning
     must reach the parquet scan's ReadSchema."""
-    from parse_html_spark.pipeline import extract_spans
+    from parse_html_spark import pipeline
 
     assert "n_chars" in corpus.columns
-    plan = _plan(extract_spans(corpus))
+    plan = _plan(PER_DOC_MAPS[name](pipeline, corpus))
+    assert plan.count("MapInPandas") == 1
     scan_lines = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan_lines and all("n_chars" not in ln for ln in scan_lines)
+
+
+def test_pipeline_has_one_python_boundary():
+    """Every per-doc map goes through map_docs: pipeline.py calls
+    mapInPandas in exactly one place."""
+    import inspect
+
+    from parse_html_spark import pipeline
+
+    assert inspect.getsource(pipeline).count(".mapInPandas(") == 1
+    assert ".mapInPandas(" in inspect.getsource(pipeline.map_docs)
 
 
 def test_bucketed_writes_are_size_clustered(spark, tmp_path, corpus):
@@ -92,12 +124,14 @@ def test_bucketed_writes_are_size_clustered(spark, tmp_path, corpus):
 def test_exploded_rows_generated_jvm_side(spark, corpus):
     """extract_spans' row form must be the compact map + a JVM Generate
     (posexplode): exactly ONE Python stage in the plan, and a Generate
-    above it -- per-span rows never exist in Python."""
+    above it -- per-span rows never exist in Python, with or without
+    the partition_id column."""
     from parse_html_spark.pipeline import extract_spans
 
-    plan = _plan(extract_spans(corpus))
-    assert plan.count("MapInPandas") == 1
-    assert "Generate" in plan and "posexplode" in plan
+    for pid in (False, True):
+        plan = _plan(extract_spans(corpus, with_partition_id=pid))
+        assert plan.count("MapInPandas") == 1
+        assert "Generate" in plan and "posexplode" in plan
 
 
 def test_pdf_read_single_python_stage(spark, tmp_path):

@@ -78,6 +78,9 @@ def main() -> None:
         ids = b.column(0).to_pylist()
         spans_col = b.column(1)
         offs = spans_col.offsets.to_pylist()
+        # a batch sliced out of a row group has offsets starting past 0,
+        # while flatten() returns only its own values
+        offs = [o - offs[0] for o in offs]
         flat = spans_col.flatten()
         f_kind = flat.field(0).to_pylist()
         f_text = flat.field(1).to_pylist()

@@ -63,7 +63,7 @@ def main() -> None:
     pairs += extra
 
     if mode == "time":
-        # time-only mode for interleaved A/B runs (see tools/ab_engine.py)
+        # time-only mode; interleaved A/B timing lives in tools/ab_inproc.py
         import json
 
         for h, m in pairs:  # warm
